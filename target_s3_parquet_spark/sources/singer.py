@@ -14,6 +14,15 @@ executors. The per-contiguous-run buffering (R8) becomes
 ``partitionBy(stream)``: order-independent, no small-file explosion on
 interleaved streams.
 
+The control plane is ONE driver-side collect
+(``collect_control_plane`` → ``(plans, last_state, activations)``)
+shared by the batch target (``sink.run_singer_to_parquet``) and every
+streaming epoch (``streaming.singer_stream``). Both targets therefore
+fail fast on the same conditions, before any write: an invalid JSON
+line, or a RECORD for a stream with no SCHEMA before it (R5) — raised
+as ``SingerError`` like the reference's consumer loop. Strict
+validation failures raise when the records are written.
+
 Validation (R4): the baked-in image has no ``jsonschema`` package, so
 the Draft4 subset that matters for tabular data (type, required,
 nullability, maxLength, min/max) is compiled to native ``when``-checks
@@ -123,14 +132,25 @@ def parse_message_lines(raw: DataFrame, line_col: str = "value") -> DataFrame:
     )
 
 
-def collect_control_plane(messages: DataFrame) -> tuple[dict[str, StreamPlan], str | None, list[str]]:
-    """Driver-side pass over the *control* messages only (SCHEMA/STATE —
-    O(streams + bookmarks), never O(records)): build per-stream plans
-    and find the final STATE value (R13: only the last one matters).
+def collect_control_plane(
+    messages: DataFrame, in_force: dict[str, StreamPlan] | None = None
+) -> tuple[dict[str, StreamPlan], str | None, dict[str, int]]:
+    """Driver-side pass over the *control* messages only (SCHEMA, STATE,
+    ACTIVATE_VERSION, plus one first-line marker per RECORD stream —
+    O(streams + bookmarks), never O(records)), in ONE collect.
 
-    Returns (plans, last_state_json, message_type_order) where
-    message_type_order preserves first-seen line order per stream for
-    the record-before-schema guard (R5).
+    Returns ``(plans, last_state_json, activations)``:
+    - ``plans``: one StreamPlan per stream with a SCHEMA in ``messages``
+      (a later SCHEMA replaces an earlier one);
+    - ``last_state_json``: the value of the LAST STATE message (R13:
+      only the last one matters, even when its value is null);
+    - ``activations``: the last ACTIVATE_VERSION per stream (L5).
+
+    Fatal conditions (``SingerError``), checked before any write:
+    an invalid JSON line, or a RECORD whose stream has no SCHEMA before
+    it (R5). ``in_force`` holds the plans declared before this slice of
+    the log (the streaming target's epochs); RECORDs of those streams
+    pass the R5 check without a SCHEMA in the slice.
 
     Schema-evolution policy (SURVEY hard part #4): the reference
     validates each record under the schema in force at its log
@@ -145,10 +165,11 @@ def collect_control_plane(messages: DataFrame) -> tuple[dict[str, StreamPlan], s
         messages.withColumn("_line", F.monotonically_increasing_id())
         .filter(
             F.col("_corrupt")
-            | F.col("type").isin("SCHEMA", "STATE")
+            | (F.col("type") == "STATE")
             | (
-                (F.col("type") == "RECORD")
-                & F.col("stream").isNotNull()
+                F.col("type").isin("SCHEMA", "RECORD", "ACTIVATE_VERSION")
+                # drops null and empty stream names alike
+                & (F.col("stream") != "")
             )
         )
         # for RECORDs we only need the first line number per stream
@@ -159,6 +180,7 @@ def collect_control_plane(messages: DataFrame) -> tuple[dict[str, StreamPlan], s
             F.max_by("schema_json", "_line").alias("schema_json"),
             F.max_by("state_json", "_line").alias("state_json"),
             F.max_by("key_properties", "_line").alias("key_properties"),
+            F.max_by("version", "_line").alias("version"),
             F.max(F.col("_corrupt").cast("int")).alias("corrupt"),
         )
         .collect()
@@ -167,11 +189,12 @@ def collect_control_plane(messages: DataFrame) -> tuple[dict[str, StreamPlan], s
         raise SingerError("invalid JSON in message log")
 
     plans: dict[str, StreamPlan] = {}
+    activations: dict[str, int] = {}
     first_record_line: dict[str, int] = {}
     first_schema_line: dict[str, int] = {}
     last_state, last_state_line = None, -1
     for r in ctl:
-        if r["type"] == "SCHEMA" and r["stream"]:
+        if r["type"] == "SCHEMA":
             # later SCHEMAs replace earlier ones (reference __init__.py:241)
             plans[r["stream"]] = StreamPlan(
                 stream=r["stream"],
@@ -179,21 +202,25 @@ def collect_control_plane(messages: DataFrame) -> tuple[dict[str, StreamPlan], s
                 key_properties=list(r["key_properties"] or []),
             )
             first_schema_line[r["stream"]] = r["first_line"]
-        elif r["type"] == "RECORD" and r["stream"]:
+        elif r["type"] == "RECORD":
             first_record_line[r["stream"]] = r["first_line"]
+        elif r["type"] == "ACTIVATE_VERSION" and r["version"] is not None:
+            activations[r["stream"]] = int(r["version"])
         elif r["type"] == "STATE":
             if r["last_line"] > last_state_line:
                 last_state, last_state_line = r["state_json"], r["last_line"]
 
     # R5: RECORD before its stream's SCHEMA is a hard error.
     for stream, rline in first_record_line.items():
+        if stream in (in_force or {}):
+            continue
         sline = first_schema_line.get(stream)
         if sline is None or rline < sline:
             raise SingerError(
                 f"A record for stream {stream} was encountered "
                 f"before a corresponding schema"
             )
-    return plans, last_state, list(plans)
+    return plans, last_state, activations
 
 
 def _compile_validators(plan: StreamPlan, rec: Column) -> list[tuple[str, Column]]:
@@ -337,23 +364,6 @@ def records_for_stream(
     if validate != "permissive":
         flat = flat.drop("_validation_error")
     return flat.drop("time_extracted")
-
-
-def collect_activations(messages: DataFrame) -> dict[str, int]:
-    """L5: last ACTIVATE_VERSION per stream (reference `__init__.py:
-    144-145` logs-and-drops these; SURVEY §2A maps L5 to version-column
-    + dynamic partition overwrite, which the sink implements). A
-    control-plane collect: O(streams)."""
-    rows = (
-        messages.withColumn("_line", F.monotonically_increasing_id())
-        .filter(
-            (F.col("type") == "ACTIVATE_VERSION") & F.col("stream").isNotNull()
-        )
-        .groupBy("stream")
-        .agg(F.max_by("version", "_line").alias("version"))
-        .collect()
-    )
-    return {r["stream"]: int(r["version"]) for r in rows if r["version"] is not None}
 
 
 def ingest(

@@ -30,6 +30,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from target_s3_parquet_spark.sources.singer import StreamPlan
+
 VALID_CODECS = {"none", "uncompressed", "snappy", "gzip", "brotli", "zstd", "lz4"}
 
 
@@ -162,6 +164,42 @@ def activate_version_swap(
     return os.path.join(cfg.path, f"stream={stream}")
 
 
+def write_streams(
+    messages: DataFrame,
+    plans: dict[str, StreamPlan],
+    activations: dict[str, int],
+    cfg: SinkConfig,
+    validate: str = "strict",
+    add_metadata: bool = False,
+    compat: bool = False,
+) -> list[str]:
+    """The per-stream write loop both Singer targets share (the batch
+    run and each streaming epoch): every planned stream's records are
+    validated and flattened, then appended — or, with
+    ``cfg.activate_version`` and an ACTIVATE_VERSION for the stream,
+    swapped in by the L5 version swap. Returns the written paths."""
+    # imported per call, so a wrapper installed on the module is seen
+    from target_s3_parquet_spark.sources.singer import records_for_stream
+
+    written = []
+    for s, p in plans.items():
+        df = records_for_stream(
+            messages,
+            p,
+            validate,
+            add_metadata,
+            compat,
+            with_version=cfg.activate_version,
+        )
+        if cfg.activate_version and s in activations:
+            written.append(
+                activate_version_swap(df.sparkSession, df, s, activations[s], cfg)
+            )
+        else:
+            written.append(write_stream_parquet(df, s, cfg))
+    return written
+
+
 def run_singer_to_parquet(
     spark: SparkSession,
     message_log_path: str,
@@ -177,31 +215,15 @@ def run_singer_to_parquet(
     ``cfg.activate_version``, streams carrying an ACTIVATE_VERSION
     message get the L5 version swap instead of an append."""
     from target_s3_parquet_spark.sources.singer import (
-        collect_activations,
         collect_control_plane,
         read_message_log,
-        records_for_stream,
     )
 
     messages = read_message_log(spark, message_log_path)
-    plans, state, _ = collect_control_plane(messages)
-    activations = collect_activations(messages) if cfg.activate_version else {}
-    written = []
-    for s, p in plans.items():
-        df = records_for_stream(
-            messages,
-            p,
-            validate,
-            add_metadata,
-            compat,
-            with_version=cfg.activate_version,
-        )
-        if s in activations:
-            written.append(
-                activate_version_swap(spark, df, s, activations[s], cfg)
-            )
-        else:
-            written.append(write_stream_parquet(df, s, cfg))
+    plans, state, activations = collect_control_plane(messages)
+    written = write_streams(
+        messages, plans, activations, cfg, validate, add_metadata, compat
+    )
     return written, state
 
 

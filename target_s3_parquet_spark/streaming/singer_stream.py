@@ -8,29 +8,38 @@ producer/consumer processes + final-state-on-stdout (R13/R14):
   place on crash and re-uploads — at-least-once with no recovery log).
 - STATE bookmarks are recorded per epoch AFTER the epoch's writes
   commit, so a restart resumes from the last durable bookmark.
-- Stream fan-out happens inside one micro-batch write (partitionBy),
-  not one file per contiguous run.
+- Each stream lands in its own ``stream=`` partition directory, not one
+  file per contiguous run.
+
+An epoch is the batch target run over one slice of the log: the same
+control-plane collect (``sources.singer.collect_control_plane``, one
+job per epoch) and the same per-stream write loop
+(``sources.sink.write_streams``). So the fatal conditions are the batch
+target's: an invalid JSON line, or a RECORD for a stream with no SCHEMA
+either in force (``SingerStreamJob.plans``) or earlier in the slice,
+raises ``SingerError`` and stops the query before the epoch writes any
+Parquet or bookmark. The epoch's bookmark is its last STATE message.
 
 Schema handling: SCHEMA messages must be known before the stream
-starts (they define the output StructTypes); a mid-run SCHEMA change
-lands in ``_schema_evolution`` for the operator to restart with — the
+starts (they define the output StructTypes); a SCHEMA for an unknown
+stream, or a changed re-SCHEMA of a known one, lands in
+``observed_schema_changes`` for the operator to restart with — the
 explicit policy SURVEY §7 'hard parts #4' calls for.
 """
 
 from __future__ import annotations
 
-import json
 import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from target_s3_parquet_spark.sources.singer import (
     StreamPlan,
+    collect_control_plane,
     parse_message_lines,
-    records_for_stream,
 )
+from target_s3_parquet_spark.sources.sink import SinkConfig, write_streams
 
 
 @dataclass
@@ -59,80 +68,43 @@ class SingerStreamJob:
     observed_schema_changes: list[str] = field(default_factory=list)
 
     def _process_batch(self, batch: DataFrame, epoch_id: int) -> None:
-        from target_s3_parquet_spark.sources.singer import collect_activations
-
         messages = parse_message_lines(batch)
         messages.cache()
         try:
-            activations = (
-                collect_activations(messages) if self.activate_version else {}
+            # control plane first: invalid JSON and R5 stop the query
+            # before this epoch writes anything
+            plans, state, activations = collect_control_plane(
+                messages, in_force=self.plans
             )
-            # data plane: every known stream, one partitioned write
-            for stream, plan in self.plans.items():
-                flat = records_for_stream(
-                    messages,
-                    plan,
-                    validate=self.validate,
-                    compat=self.compat,
-                    with_version=self.activate_version,
-                )
-                if stream in activations:
-                    from target_s3_parquet_spark.sources.sink import (
-                        SinkConfig,
-                        activate_version_swap,
-                    )
-
-                    activate_version_swap(
-                        flat.sparkSession,
-                        flat,
-                        stream,
-                        activations[stream],
-                        SinkConfig(
-                            path=self.output_path, compression=self.compression
-                        ),
-                    )
-                    continue
-                (
-                    flat.withColumn("stream", F.lit(stream))
-                    .write.mode("append")
-                    .option("compression", self.compression)
-                    .partitionBy("stream")
-                    .parquet(self.output_path)
-                )
-            # control plane: record the epoch's final STATE *after* the
-            # writes above committed (R13 ordering)
-            states = (
-                messages.withColumn("_line", F.monotonically_increasing_id())
-                .filter((F.col("type") == "STATE") & F.col("state_json").isNotNull())
-                .agg(F.max_by("state_json", "_line").alias("s"))
-                .collect()
+            write_streams(
+                messages,
+                self.plans,
+                activations,
+                SinkConfig(
+                    path=self.output_path,
+                    compression=self.compression,
+                    activate_version=self.activate_version,
+                ),
+                validate=self.validate,
+                compat=self.compat,
             )
-            state_val = states[0]["s"] if states else None
-            if state_val is not None and self.state_dir:
+            # record the epoch's final STATE *after* the writes above
+            # committed (R13 ordering)
+            if state is not None and self.state_dir:
                 os.makedirs(self.state_dir, exist_ok=True)
                 with open(
                     os.path.join(self.state_dir, f"state-{epoch_id:010d}.json"), "w"
                 ) as f:
-                    f.write(state_val)
-            # schema evolution: surface SCHEMA messages for unknown
-            # streams AND mid-run re-SCHEMAs of known streams whose
-            # payload differs from the plan in force — the latter is the
-            # actual evolution case (new columns would otherwise keep
-            # parsing under the stale plan and be silently dropped).
-            # Control-plane collect: O(streams), never O(records).
-            schema_rows = (
-                messages.withColumn("_line", F.monotonically_increasing_id())
-                .filter((F.col("type") == "SCHEMA") & F.col("stream").isNotNull())
-                .groupBy("stream")
-                .agg(F.max_by("schema_json", "_line").alias("schema_json"))
-                .collect()
-            )
-            for r in schema_rows:
-                plan = self.plans.get(r["stream"])
-                if plan is None:
-                    self.observed_schema_changes.append(r["stream"])
-                elif json.loads(r["schema_json"] or "{}") != plan.json_schema:
-                    self.observed_schema_changes.append(r["stream"])
+                    f.write(state)
+            # schema evolution: SCHEMA messages for unknown streams AND
+            # mid-run re-SCHEMAs of known streams whose payload differs
+            # from the plan in force — the latter is the actual
+            # evolution case (new columns would otherwise keep parsing
+            # under the stale plan and be silently dropped)
+            for stream, plan in plans.items():
+                known = self.plans.get(stream)
+                if known is None or plan.json_schema != known.json_schema:
+                    self.observed_schema_changes.append(stream)
         finally:
             messages.unpersist()
 
@@ -163,8 +135,6 @@ def latest_state(state_dir: str) -> str | None:
 def plans_from_log_head(spark: SparkSession, log_dir: str) -> dict[str, StreamPlan]:
     """Bootstrap the control plane from the log files present at start
     (batch read of SCHEMA messages only)."""
-    from target_s3_parquet_spark.sources.singer import collect_control_plane
-
     messages = parse_message_lines(spark.read.text(os.path.join(log_dir, "*")))
     plans, _, _ = collect_control_plane(messages)
     return plans

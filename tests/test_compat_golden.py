@@ -126,7 +126,7 @@ def test_golden_final_state(three_streams):
 
 def test_golden_activation_versions(spark):
     from target_s3_parquet_spark.sources.singer import (
-        collect_activations,
+        collect_control_plane,
         read_message_log,
     )
 
@@ -134,7 +134,7 @@ def test_golden_activation_versions(spark):
     # last ACTIVATE_VERSION per stream; note table_three receives an
     # activation for v3 BEFORE its SCHEMA, then v2 twice after — last
     # wins, matching the reference's sequential consumer
-    assert collect_activations(msgs) == {T1: 1, T2: 3, T3: 2}
+    assert collect_control_plane(msgs)[2] == {T1: 1, T2: 3, T3: 2}
 
 
 def test_golden_invalid_json_raises(spark):

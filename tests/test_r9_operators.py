@@ -228,6 +228,21 @@ def test_concordance_stats_match_bruteforce(spark, tmp_path):
     assert abs(got.somers_d_qty - (c - d) / untied_g) < 1e-12
 
 
+def test_concordance_counts_empty_input(spark):
+    """An empty point relation has n = 0, as the oracle's COUNT(*) —
+    not SUM's NULL."""
+    from target_s3_parquet_spark.operators._util import release_rank_caches
+    from target_s3_parquet_spark.operators.aggregates import _concordance_counts
+
+    try:
+        got = _concordance_counts(
+            spark.createDataFrame([], "v int, g double")
+        ).collect()
+    finally:
+        release_rank_caches()
+    assert len(got) == 1 and got[0]["n"] == 0
+
+
 def test_tau_within_kernel_exact_past_int64_product_range():
     """ADVICE r8: with ~3.1e9 rows in two cells the dominance product
     m * pfx is ~9.61e18 > int64 max (9.22e18); the kernel must return

@@ -67,11 +67,16 @@ def test_compat_mode_stringifies_arrays(spark, log3):
     assert dict(streams["app-clicks"].dtypes)["at"] == "string"
 
 
-def test_state_is_last_one(spark, log3):
+def test_state_is_last_one(spark, log3, tmp_path):
     _, state = _ingest(spark, log3)
     assert json.loads(state) == {
         "bookmarks": {"app-users": {"id": 3}, "app-clicks": {"id": 11}}
     }
+    # the last STATE message wins even when its value is null, as in
+    # the reference's consumer loop — no earlier bookmark is revived
+    nulled = fx.three_stream_log() + [fx._msg(type="STATE", value=None)]
+    _, state = _ingest(spark, fx.write_log(str(tmp_path), nulled, "nulled.jsonl"))
+    assert state is None
 
 
 def test_invalid_json_raises(spark, tmp_path):

@@ -6,7 +6,36 @@ re-upload-on-crash behavior."""
 import json
 import os
 
+import pytest
+
 from tests import singer_fixtures as fx
+
+
+def _users_epoch(spark, tmp_path, lines, name):
+    """Append ``lines`` to the log as file ``name`` and drain the job
+    that has only ``app-users`` declared at start; returns the job."""
+    from target_s3_parquet_spark.sources.singer import StreamPlan
+    from target_s3_parquet_spark.streaming.singer_stream import SingerStreamJob
+
+    (tmp_path / "log").mkdir(exist_ok=True)
+    fx.write_log(str(tmp_path / "log"), lines, name)
+    job = SingerStreamJob(
+        plans={"app-users": StreamPlan("app-users", fx.USERS_SCHEMA, ["id"])},
+        output_path=str(tmp_path / "out"),
+        checkpoint_path=str(tmp_path / "ckpt"),
+        state_dir=str(tmp_path / "state"),
+    )
+    q = job.start(spark, str(tmp_path / "log"))
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    return job
+
+
+def _bookmarks(tmp_path) -> list[str]:
+    d = tmp_path / "state"
+    return sorted(os.listdir(d)) if d.is_dir() else []
 
 
 def test_stream_ingest_multi_epoch_and_resume(spark, tmp_path):
@@ -114,3 +143,51 @@ def test_known_stream_reschema_surfaces_evolution(spark, tmp_path):
     q2.processAllAvailable()
     q2.stop()
     assert "app-users" in job.observed_schema_changes
+
+
+def test_invalid_json_epoch_fails_before_writing(spark, tmp_path):
+    """A non-JSON line stops the query with the batch target's
+    SingerError; the epoch writes neither Parquet nor a bookmark."""
+    lines = fx.invalid_json_log() + [
+        fx._msg(type="STATE", value={"bookmarks": {"app-users": {"id": 1}}})
+    ]
+    with pytest.raises(Exception, match="SingerError: invalid JSON"):
+        _users_epoch(spark, tmp_path, lines, "000.jsonl")
+    assert not (tmp_path / "out").exists()
+    assert _bookmarks(tmp_path) == []
+
+
+def test_record_without_schema_fails_like_batch(spark, tmp_path):
+    """R5 in an epoch: RECORDs of a stream declared at start need no
+    SCHEMA in the slice; a RECORD for a stream with no SCHEMA in force
+    or earlier in the slice stops the query before that epoch writes."""
+    users = [
+        fx._msg(type="RECORD", stream="app-users", record={"id": 1}),
+        fx._msg(type="STATE", value={"bookmarks": {"app-users": {"id": 1}}}),
+    ]
+    _users_epoch(spark, tmp_path, users, "000.jsonl")
+    assert spark.read.parquet(str(tmp_path / "out")).count() == 1
+    assert len(_bookmarks(tmp_path)) == 1
+
+    clicks = [
+        fx._msg(type="RECORD", stream="app-clicks", record={"id": 10}),
+        fx._msg(type="SCHEMA", stream="app-clicks", schema=fx.CLICKS_SCHEMA,
+                key_properties=["id"]),
+    ]
+    with pytest.raises(Exception, match="SingerError: A record for stream app-clicks"):
+        _users_epoch(spark, tmp_path, users + clicks, "001.jsonl")
+    assert spark.read.parquet(str(tmp_path / "out")).count() == 1
+    assert len(_bookmarks(tmp_path)) == 1
+
+
+def test_epoch_bookmark_is_last_state(spark, tmp_path):
+    """The batch STATE rule: the epoch's last STATE message wins, so a
+    trailing null-valued STATE leaves no bookmark for that epoch."""
+    lines = [
+        fx._msg(type="RECORD", stream="app-users", record={"id": 1}),
+        fx._msg(type="STATE", value={"bookmarks": {"app-users": {"id": 1}}}),
+        fx._msg(type="STATE", value=None),
+    ]
+    _users_epoch(spark, tmp_path, lines, "000.jsonl")
+    assert spark.read.parquet(str(tmp_path / "out")).count() == 1
+    assert _bookmarks(tmp_path) == []
